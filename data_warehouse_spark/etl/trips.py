@@ -63,7 +63,8 @@ def build_trips(bike_status: DataFrame, cfg: TripConfig = TripConfig()) -> DataF
     # fall-back yields a negative gap). A UTC-gap variant would just be
     # gap over `timestamp` — kept identical to the reference (and the
     # e1 oracle) instead, because trip parity is the contract.
-    gap_s = (F.unix_micros("local_time") - F.unix_micros("prev_time")) / 1e6
+    gap_us = F.unix_micros("local_time") - F.unix_micros("prev_time")
+    gap_s = gap_us / 1e6
     trip_segments = (
         trip_data
         .filter(F.col("prev_time").isNotNull()
@@ -76,7 +77,11 @@ def build_trips(bike_status: DataFrame, cfg: TripConfig = TripConfig()) -> DataF
             F.col("prev_time").alias("start_time"),
             F.col("prev_lat").alias("start_lat"), F.col("prev_lon").alias("start_lon"),
             F.col("lat").alias("end_lat"), F.col("lon").alias("end_lon"),
-            (gap_s / 60.0).alias("duration_minutes"),
+            # integer microseconds until after the SUM: integer addition
+            # is exact in any order, so a trip of exactly 60 min sums to
+            # exactly 60.0 and stays inside the duration bound (a float
+            # minutes sum can give 60.00000000000001 and drop it)
+            gap_us.alias("duration_us"),
             haversine_km(F.col("prev_lat"), F.col("prev_lon"),
                          F.col("lat"), F.col("lon")).alias("distance_km"),
         )
@@ -97,7 +102,8 @@ def build_trips(bike_status: DataFrame, cfg: TripConfig = TripConfig()) -> DataF
              F.min("start_lon").alias("start_lon"),
              F.max("end_lat").alias("end_lat"),
              F.max("end_lon").alias("end_lon"),
-             F.sum("duration_minutes").alias("total_duration"),
+             (F.sum("duration_us") / F.lit(60000000.0))
+             .alias("total_duration"),
              F.sum("distance_km").alias("total_distance"),
              F.count(F.lit(1)).alias("segment_count"))
         .filter(F.col("total_duration").between(cfg.min_duration_min,

@@ -16,6 +16,7 @@ driver-side similarity matrices.
 
 from __future__ import annotations
 
+import functools
 import itertools
 import os
 
@@ -314,44 +315,147 @@ def minhash_signatures(df: DataFrame, text_col: str, id_col: str,
                     .alias("signature")))
 
 
+# --- LSH core: banding, candidate tail, exact verify -------------------
+# Every LSH entry point (minhash_lsh_pairs, minhash_lsh_incremental,
+# minhash_band_index / minhash_probe_index, similarity.cosine_lsh_pairs)
+# is composed from these few plan pieces.
+
+
+def _lsh_bands(sigs: DataFrame, keep: list[str], num_hashes: int,
+               bands: int) -> DataFrame:
+    """MinHash banding: (*keep, band, bucket), one row per (doc, band).
+    bucket folds the band's num_hashes/bands signature rows with one
+    xxhash64, so two docs share a (band, bucket) exactly when they
+    agree on every row of that band."""
+    if num_hashes % bands:
+        raise ValueError(
+            f"num_hashes={num_hashes} not divisible by bands={bands}: "
+            "the trailing signature rows would be silently dropped "
+            "from every band, degrading recall with no error")
+    rows_per_band = num_hashes // bands
+    return sigs.select(
+        *keep,
+        F.explode(F.array(*[
+            F.struct(F.lit(b).alias("band"),
+                     F.xxhash64(*[F.element_at("signature", b * rows_per_band + r + 1)
+                                  for r in range(rows_per_band)]).alias("bucket"))
+            for b in range(bands)
+        ])).alias("bb"),
+    ).select(*keep, "bb.band", "bb.bucket")
+
+
+def _candidate_tail(pairs: DataFrame, id_col: str,
+                    *sides: tuple) -> tuple[DataFrame, ...]:
+    """Deduplicate the banding join's candidate pairs, checkpoint them,
+    and filter each side's docs down to the candidate ids.
+
+    Returns ``(candidates, *filtered)``, one filtered DataFrame per
+    ``(src, cols)`` side. The side's id set is the distinct ``id_col``
+    values of the candidate columns ``cols``. A DataFrame ``src`` is
+    left-semi joined to it on ``id_col``; a callable ``src`` is called
+    with it (minhash_probe_index's ``fetch_texts``).
+
+    The candidates are the tiny near-dup tail, referenced by every
+    consumer below (the semi filters and the verify join spine), so
+    they are checkpointed and the banding join runs once.
+    Fault-tolerance trade, as in graph.py: checkpoint blocks are
+    executor-local with no lineage replay, so losing an executor
+    mid-query fails the job (re-run) instead of recomputing; the blocks
+    are only the candidate tail, so re-runs are cheap.
+
+    Each candidate-id set is BROADCAST into its semi join (r16, guide
+    §3.2): it derives from the checkpoint (an ExistingRDD with no size
+    stats), so the planner otherwise picks a sort-merge semi that
+    exchanges the whole src side, text or vectors included, just to
+    keep the tail's docs (plans/r16/x2_minhash_lsh_before.txt). The
+    hint is SIZE-GATED (r17, VERDICT r16 ask #3; io.bcast_id_cap
+    documents the bound): at adversarial dup rates the tail is
+    O(corpus), and above the cap the unhinted shuffle semi is kept,
+    slower but never fatal. The gate's bound is |cols| x |pairs| ids
+    per set, and its ``count()`` RUNS A SPARK JOB while the DataFrame
+    is being built: that job materializes the checkpoint, which the
+    query's own action then reads back."""
+    candidates = pairs.distinct().localCheckpoint(eager=False)
+    per_set = max(len(cols) for _, cols in sides)
+    hint = per_set * candidates.count() <= bcast_id_cap()
+    filtered = []
+    for src, cols in sides:
+        ids = functools.reduce(DataFrame.unionByName, [
+            candidates.select(F.col(c).alias(id_col)) for c in cols
+        ]).distinct()
+        ids = F.broadcast(ids) if hint else ids
+        filtered.append(src(ids) if callable(src)
+                        else src.join(ids, on=id_col, how="left_semi"))
+    return (candidates, *filtered)
+
+
+def _require_positive_threshold(jaccard_threshold: float) -> None:
+    """The array verify keeps zero-intersection candidate pairs until
+    the threshold filter (ADVICE r16), so a threshold <= 0 would report
+    every banding collision as a dup. No caller wants that; fail
+    loudly, before the candidate tail's count job."""
+    if not jaccard_threshold > 0:
+        raise ValueError(
+            f"jaccard_threshold must be > 0, got {jaccard_threshold!r}")
+
+
+def _verify_jaccard(candidates: DataFrame, a: tuple, b: tuple,
+                    id_col: str, text_col: str, shingle_n: int,
+                    jaccard_threshold: float, out: str) -> DataFrame:
+    """Exact shingle Jaccard of each candidate pair, kept at or above
+    the threshold in column ``out``. ``a`` and ``b`` are
+    ``(candidate id column, prefiltered docs, shingle-set column)``.
+
+    Array form (r16, from the .r16/x2_decomp.py stage split): each
+    candidate doc's DISTINCT shingle set rides as ONE array row through
+    the two pair joins and the intersection is one JVM array
+    intersection per pair, so |pairs| rows go through
+    join+filter instead of |pairs| x |shingles| rows through
+    join+groupBy (-18% on the whole x2 plan at 256x). Row width is
+    bounded by the largest doc's distinct-shingle count (~20 B per
+    shingle), which the length-capped corpora here keep small.
+
+    The shingle-set subtree runs once per pair side (self-join dedup
+    re-aliases the branch; no exchange reuse). It is NOT checkpointed:
+    after the broadcast semi each run is a map-only scan+filter, and a
+    checkpoint barrier here measured ~2x slower on the whole x2
+    query (5.61 vs 2.69 s best-of-5 at sf0.1)."""
+    def shingle_sets(docs: DataFrame) -> DataFrame:
+        return docs.select(
+            F.col(id_col),
+            F.array_distinct(shingles(text_col, shingle_n)).alias("__sh"))
+
+    # one shingle-set frame when both sides read the same docs (the
+    # self-pair form), so the two join sides are one subtree re-aliased
+    sets_a = shingle_sets(a[1])
+    sets_b = sets_a if b[1] is a[1] else shingle_sets(b[1])
+    paired = candidates
+    for (cand_col, _, set_col), sets in ((a, sets_a), (b, sets_b)):
+        paired = paired.join(
+            sets.select(F.col(id_col).alias(cand_col),
+                        F.col("__sh").alias(set_col)),
+            on=cand_col)
+    sa, sb = a[2], b[2]
+    n_inter = F.size(F.array_intersect(sa, sb))
+    return (paired
+            .withColumn(out, n_inter / (F.size(sa) + F.size(sb) - n_inter))
+            .filter(F.col(out) >= jaccard_threshold))
+
+
 def minhash_lsh_pairs(df: DataFrame, text_col: str, id_col: str,
                       num_hashes: int = 32, bands: int = 8,
                       shingle_n: int = 3,
                       jaccard_threshold: float = 0.5,
                       block_col: str | None = None,
-                      hash_family: str = "xxhash64",
-                      verify: str = "array") -> DataFrame:
+                      hash_family: str = "xxhash64") -> DataFrame:
     """X2: near-dup candidate pairs via LSH banding, verified by exact
     shingle Jaccard.
 
     Pipeline: signatures -> explode into `bands` band-hashes ->
     self-join on (band, band_hash) -> distinct candidate pairs ->
-    exact-Jaccard verify. Shuffles on band buckets and doc/shingle
-    keys only; never a cross join.
-
-    ``verify`` picks the exact-verify physical shape (r16, from the
-    .r16/x2_decomp.py stage split — verify was 62% of x2's wall at
-    256x, and x2 is 26% of the headline):
-
-      "array" (default): each candidate doc's DISTINCT shingle set
-        rides as ONE array row through the two pair joins and the
-        intersection is a JVM ``array_intersect`` per pair — |pairs|
-        rows through join+filter instead of |pairs| x |shingles| rows
-        through join+groupBy. Measured -18% on the whole x2 plan at
-        256x (-26% at 64x), identical output. Row width is bounded by
-        the largest doc's distinct-shingle count (~20 B/shingle):
-        fine for any chunked/length-capped corpus (x15/x18/x20
-        pipelines bound docs by construction).
-      "explode": the per-shingle row form — one (id, shingle) row per
-        doc-shingle, intersection via (id_b, shingle) join +
-        pair groupBy. Same values; prefer it only for corpora with
-        UNBOUNDED single-doc lengths (multi-MB docs would make
-        "array" rows multi-MB wide; exploded rows stay skinny and
-        spread across tasks).
-
-    Both paths verify ONLY docs that appear in some candidate pair
-    (left-semi prefilter) and are value-identical (property-tested,
-    tests/test_operators.py).
+    exact-Jaccard verify of the docs that appear in some candidate
+    pair. Shuffles on band buckets and doc keys only; never a cross
+    join.
 
     With `block_col`, candidates are restricted to pairs sharing the
     blocking key (the key joins into the bucket equi-join, so
@@ -359,23 +463,7 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str, id_col: str,
     `block` column — this is the scale path `ngram_jaccard_pairs`
     routes oversized blocks through.
     """
-    if verify not in ("array", "explode"):
-        raise ValueError(f"verify must be 'array' or 'explode', "
-                         f"got {verify!r}")
-    if not jaccard_threshold > 0:
-        # r17 (ADVICE r16): the array verify keeps zero-intersection
-        # candidate pairs until the threshold filter, while the explode
-        # verify's inner join on shingle drops them structurally — at
-        # threshold <= 0 the two shapes would diverge. No caller wants
-        # "every banding collision is a dup" anyway; fail loudly.
-        raise ValueError(
-            f"jaccard_threshold must be > 0, got {jaccard_threshold!r}")
-    if num_hashes % bands:
-        raise ValueError(
-            f"num_hashes={num_hashes} not divisible by bands={bands}: "
-            "the trailing signature rows would be silently dropped "
-            "from every band, degrading recall with no error")
-    rows_per_band = num_hashes // bands
+    _require_positive_threshold(jaccard_threshold)
     df = spread_for_compute(df)
     # NOT checkpointed: both sides of the banding self-join do
     # recompute the signature subtree (no ReusedExchange), but the
@@ -384,6 +472,7 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str, id_col: str,
     # only the final candidate set (tiny) is worth checkpointing.
     sigs = minhash_signatures(df, text_col, id_col, num_hashes, shingle_n,
                               hash_family=hash_family)
+    extra = ["block"] if block_col is not None else []
     if block_col is not None:
         # 1-field struct, not the raw value: the banding self-join and
         # the verify joins key on "block" with plain (null-UNSAFE)
@@ -394,120 +483,21 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str, id_col: str,
             df.select(F.col(id_col),
                       F.struct(F.col(block_col).alias("v")).alias("block")),
             on=id_col)
-    band_keys = ["band", "bucket"] + (["block"] if block_col is not None else [])
-    banded = sigs.select(
-        id_col, *(["block"] if block_col is not None else []),
-        F.explode(F.array(*[
-            F.struct(F.lit(b).alias("band"),
-                     F.xxhash64(*[F.element_at("signature", b * rows_per_band + r + 1)
-                                  for r in range(rows_per_band)]).alias("bucket"))
-            for b in range(bands)
-        ])).alias("bb"),
-    ).select(id_col, *(["block"] if block_col is not None else []),
-             "bb.band", "bb.bucket")
-
+    banded = _lsh_bands(sigs, [id_col, *extra], num_hashes, bands)
     left = banded.withColumnRenamed(id_col, "id_a")
     right = banded.withColumnRenamed(id_col, "id_b")
-    candidates = (left.join(right, on=band_keys)
-                  .filter(F.col("id_a") < F.col("id_b"))
-                  .select("id_a", "id_b",
-                          *(["block"] if block_col is not None else []))
-                  .distinct()
-                  # referenced twice below (verify join + semi-join id
-                  # prefilter); checkpoint so the banding join runs
-                  # once — candidates are the tiny near-dup tail, so
-                  # the materialization is cheap at any corpus size.
-                  # eager=False keeps plan construction lazy (no job
-                  # until an action runs). Fault-tolerance trade, as in
-                  # graph.py: checkpoint blocks are executor-local with
-                  # no lineage replay, so losing an executor mid-query
-                  # fails the job (re-run) instead of recomputing — the
-                  # blocks here are only the candidate tail, so re-runs
-                  # are cheap relative to protecting them
-                  .localCheckpoint(eager=False))
-
-    # exact verify: Jaccard over distinct shingles — computed ONLY for
-    # docs that appear in some candidate pair (left-semi prefilter).
-    # Banding already exploded the whole corpus once; re-exploding it
-    # all for the verify would double the corpus-sized work, while the
-    # candidate set is the tiny near-dup tail by construction.
-    #
-    # cand_ids is BROADCAST (r16, guide §3.2): it derives from the
-    # checkpointed candidate tail (an ExistingRDD with no size stats),
-    # so the planner defaulted to a sort-merge semi-join that
-    # EXCHANGED the whole corpus — text payload included — on id just
-    # to keep the tail's docs (plans/r16/x2_minhash_lsh_before.txt,
-    # Exchange(4)+Sort(5) over the documents scan, twice). The hint
-    # turns it into a broadcast semi right above the scan: zero
-    # corpus shuffle. Size bound: cand_ids <= 2 x |candidate pairs|
-    # ids — the same tail-smallness the localCheckpoint above already
-    # relies on, and strictly fewer bytes than the (id, shingle-set)
-    # sides the verify join below has ALWAYS broadcast.
-    #
-    # The hint is SIZE-GATED (r17, VERDICT r16 ask #3): at adversarial
-    # dup rates the tail is O(corpus) and the hint would hard-fail at
-    # the broadcast cap; the count scans only the (materialized)
-    # checkpoint, and above the cap the pre-r16 shuffle semi-join is
-    # kept — slower, never fatal. io.bcast_id_cap documents the bound.
-    extra = ["block"] if block_col is not None else []
-    cand_ids = (candidates.select(F.col("id_a").alias(id_col))
-                .unionByName(candidates.select(F.col("id_b").alias(id_col)))
-                .distinct())
-    if 2 * candidates.count() <= bcast_id_cap():
-        cand_ids = F.broadcast(cand_ids)
-    in_pairs = df.join(cand_ids, on=id_col, how="left_semi")
-    if verify == "array":
-        # NOT checkpointed: the shingle-set subtree does run once per
-        # pair side (self-join dedup re-aliases the branch; no
-        # exchange reuse even at runtime — .r16/x2_verify_shape.py),
-        # but with the broadcast semi above each run is a map-only
-        # scan+filter that pipelines across cores, and a measured
-        # localCheckpoint barrier here cost ~2x on the whole query
-        # (5.61 vs 2.69 s best-of-5 at sf0.1) — the same
-        # recompute-beats-materialize verdict as the signature
-        # subtree (SCALE.md round-16 x2 decomposition).
-        docsh = in_pairs.select(
-            F.col(id_col).alias("id"),
-            F.array_distinct(shingles(text_col, shingle_n)).alias("shset"))
-        a = docsh.select(F.col("id").alias("id_a"),
-                         F.col("shset").alias("sh_a"))
-        b = docsh.select(F.col("id").alias("id_b"),
-                         F.col("shset").alias("sh_b"))
-        paired = candidates.join(a, on="id_a").join(b, on="id_b")
-        n_inter = F.size(F.array_intersect("sh_a", "sh_b"))
-        jac = n_inter / (F.size("sh_a") + F.size("sh_b") - n_inter)
-        return (paired.withColumn("jaccard", jac)
-                .filter(F.col("jaccard") >= jaccard_threshold)
-                .select(*([F.col("block")["v"].alias("block")]
-                          if block_col is not None else []),
-                        "id_a", "id_b",
-                        F.round("jaccard", 6).alias("jaccard")))
-    sh = (in_pairs.select(
-        F.col(id_col).alias("id"),
-        F.explode(F.array_distinct(shingles(text_col, shingle_n)))
-        .alias("shingle")))
-    sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("n_sh"))
-    # join the b-side on (id_b, shingle) so the hash join emits only the
-    # shingle intersection — joining on id_b alone would materialize an
-    # |A|x|B| per-pair shingle cross product before the equality filter
-    inter = (candidates
-             .join(sh.withColumnRenamed("id", "id_a"), on="id_a")
-             .join(sh.withColumnRenamed("id", "id_b"),
-                   on=["id_b", "shingle"])
-             .groupBy("id_a", "id_b", *extra)
-             .agg(F.count(F.lit(1)).alias("n_inter")))
-    out = (inter
-           .join(sizes.withColumnRenamed("id", "id_a")
-                 .withColumnRenamed("n_sh", "n_a"), on="id_a")
-           .join(sizes.withColumnRenamed("id", "id_b")
-                 .withColumnRenamed("n_sh", "n_b"), on="id_b")
-           .withColumn("jaccard", F.col("n_inter")
-                       / (F.col("n_a") + F.col("n_b") - F.col("n_inter")))
-           .filter(F.col("jaccard") >= jaccard_threshold)
-           .select(*([F.col("block")["v"].alias("block")]
-                     if block_col is not None else []),
-                   "id_a", "id_b", F.round("jaccard", 6).alias("jaccard")))
-    return out
+    candidates, in_pairs = _candidate_tail(
+        left.join(right, on=["band", "bucket", *extra])
+        .filter(F.col("id_a") < F.col("id_b"))
+        .select("id_a", "id_b", *extra),
+        id_col, (df, ("id_a", "id_b")))
+    return (_verify_jaccard(candidates, ("id_a", in_pairs, "sh_a"),
+                            ("id_b", in_pairs, "sh_b"), id_col, text_col,
+                            shingle_n, jaccard_threshold, "jaccard")
+            .select(*([F.col("block")["v"].alias("block")]
+                      if block_col is not None else []),
+                    "id_a", "id_b",
+                    F.round("jaccard", 6).alias("jaccard")))
 
 
 def minhash_lsh_incremental(corpus: DataFrame, batch: DataFrame,
@@ -536,107 +526,18 @@ def minhash_lsh_incremental(corpus: DataFrame, batch: DataFrame,
     At 100 TB the index is the persisted artifact — bucketed by
     (band, bucket) j12-style so the daily probe join co-locates
     without a corpus-side shuffle — and only the BATCH is shingled
-    per run; corpus text is touched only for the candidate tail's
-    verify (left-semi on candidate ids, which prunes the corpus scan
-    to near-dup suspects). Banding arithmetic matches
-    minhash_lsh_pairs band-for-band (same signature family, same
-    xxhash64 bucket fold) but is spelled locally rather than
-    factored out: sharing a helper would make every X2-family query
-    a code-change in lockstep with this one, and the 10-line
-    expression is cheaper to keep in sync than the re-verification
-    of four green queries (window-budget trade, documented here).
-
-    The exact verify uses minhash_lsh_pairs' array_intersect-per-pair
-    shape (r16): each candidate doc's DISTINCT shingle set rides as
-    ONE array row through the pair joins — |pairs| rows through
-    join+filter instead of |pairs| x |shingles| rows through
-    join+groupBy, and the two per-side size aggregates disappear.
-    Value-identical to the exploded form (a zero-shingle doc can
-    never be a candidate — no signature, no bands — and every
-    candidate pair's jaccard is the same arithmetic either way);
-    pinned by the x2g oracle + the self-dedup property test.
+    per run. This inline form is exactly that probe
+    (minhash_probe_index) over an index built here from the corpus;
+    corpus text is touched only for the candidate tail's verify
+    (left-semi on the gated candidate-id set, which prunes the corpus
+    scan to near-dup suspects).
     """
-    if not jaccard_threshold > 0:
-        # ADVICE r16: the array verify would emit zero-intersection
-        # pairs at threshold <= 0 that the exploded form never did
-        raise ValueError(
-            f"jaccard_threshold must be > 0, got {jaccard_threshold!r}")
-    if num_hashes % bands:
-        raise ValueError(
-            f"num_hashes={num_hashes} not divisible by bands={bands}: "
-            "the trailing signature rows would be silently dropped "
-            "from every band, degrading recall with no error")
-    rows_per_band = num_hashes // bands
     corpus = spread_for_compute(corpus)
-    batch = spread_for_compute(batch)
-
-    def banded(src: DataFrame, out_id: str) -> DataFrame:
-        sigs = minhash_signatures(src, text_col, id_col,
-                                  num_hashes, shingle_n)
-        return (sigs.select(
-            F.col(id_col).alias(out_id),
-            F.explode(F.array(*[
-                F.struct(F.lit(b).alias("band"),
-                         F.xxhash64(*[F.element_at(
-                             "signature", b * rows_per_band + r + 1)
-                             for r in range(rows_per_band)]).alias("bucket"))
-                for b in range(bands)
-            ])).alias("bb"))
-            .select(out_id, "bb.band", "bb.bucket"))
-
-    index = banded(corpus, "__cid")          # the persisted artifact
-    probes = banded(batch, "__bid")
-    candidates = (probes.join(index, on=["band", "bucket"])
-                  .select("__bid", "__cid")
-                  .distinct()
-                  # referenced three times below (two semi-filters +
-                  # the verify join spine); checkpoint so the banding
-                  # join runs once — candidates are the tiny near-dup
-                  # tail. Same fault-tolerance trade as
-                  # minhash_lsh_pairs: blocks are executor-local, a
-                  # lost executor re-runs the (cheap) query.
-                  .localCheckpoint(eager=False))
-    # size-gate for the two side broadcasts below (r17, VERDICT r16
-    # ask #3 — io.bcast_id_cap documents the bound); per-side distinct
-    # ids <= |pairs|, and the count scans only the checkpointed tail
-    hint_ids = candidates.count() <= bcast_id_cap()
-
-    def side_sets(src: DataFrame, ids: DataFrame, out_id: str,
-                  set_col: str) -> DataFrame:
-        # broadcast the candidate-id set (r16, guide §3.2): it derives
-        # from the checkpointed tail (ExistingRDD, no stats), so the
-        # planner otherwise exchanges the whole src side — corpus text
-        # included — just to keep the tail's docs. Same tail-smallness
-        # bound the checkpoint above already relies on; above the cap
-        # the unhinted shuffle semi is kept (slower, never fatal).
-        ids = ids.withColumnRenamed(out_id, id_col).distinct()
-        in_pairs = src.join(
-            F.broadcast(ids) if hint_ids else ids,
-            on=id_col, how="left_semi")
-        return in_pairs.select(
-            F.col(id_col).alias(out_id),
-            F.array_distinct(shingles(text_col, shingle_n))
-            .alias(set_col))
-
-    bset = side_sets(batch, candidates.select("__bid"), "__bid", "sh_b")
-    cset = side_sets(corpus, candidates.select("__cid"), "__cid", "sh_c")
-    paired = candidates.join(bset, on="__bid").join(cset, on="__cid")
-    n_inter = F.size(F.array_intersect("sh_b", "sh_c"))
-    jac = (paired
-           .withColumn("__j", n_inter / (F.size("sh_b") + F.size("sh_c")
-                                         - n_inter))
-           .filter(F.col("__j") >= jaccard_threshold))
-    # winner per batch doc = LEXICOGRAPHIC struct min: corpus ids are
-    # distinct within a group, so this is min(__cid) carrying its own
-    # pair's jaccard along — no second join to recover the score
-    best = (jac.groupBy("__bid")
-            .agg(F.min(F.struct(F.col("__cid"), F.col("__j"))).alias("m"))
-            .select(F.col("__bid").alias(id_col),
-                    F.col("m.__cid").alias("dup_of"),
-                    F.round("m.__j", 6).alias("jaccard")))
-    return (batch.select(id_col).join(best, on=id_col, how="left")
-            .select(id_col, "dup_of", "jaccard",
-                    F.col("dup_of").isNotNull().alias("is_dup")))
+    return minhash_probe_index(
+        minhash_band_index(corpus, text_col, id_col, num_hashes, bands,
+                           shingle_n),
+        batch, lambda ids: corpus.join(ids, on=id_col, how="left_semi"),
+        text_col, id_col, num_hashes, bands, shingle_n, jaccard_threshold)
 
 
 def minhash_band_index(df: DataFrame, text_col: str, id_col: str,
@@ -646,29 +547,11 @@ def minhash_band_index(df: DataFrame, text_col: str, id_col: str,
     (band, bucket, corpus_id) — one row per (doc, band). Write it once
     with operators.bucketing.write_bucketed(keys=[band, bucket]) and
     every daily probe join co-locates with NO index-side Exchange
-    (tests/test_plans.py pins the plan). Banding arithmetic is
-    band-for-band identical to minhash_lsh_incremental's inline form
-    (same signature family, same xxhash64 bucket fold) — asserted
-    equal in tests, not shared, for the window-budget reason
-    documented there."""
-    if num_hashes % bands:
-        raise ValueError(
-            f"num_hashes={num_hashes} not divisible by bands={bands}: "
-            "the trailing signature rows would be silently dropped "
-            "from every band, degrading recall with no error")
-    rows_per_band = num_hashes // bands
+    (tests/test_plans.py pins the plan)."""
     sigs = minhash_signatures(spread_for_compute(df), text_col, id_col,
                               num_hashes, shingle_n)
-    return (sigs.select(
-        F.col(id_col).alias("corpus_id"),
-        F.explode(F.array(*[
-            F.struct(F.lit(b).alias("band"),
-                     F.xxhash64(*[F.element_at(
-                         "signature", b * rows_per_band + r + 1)
-                         for r in range(rows_per_band)]).alias("bucket"))
-            for b in range(bands)
-        ])).alias("bb"))
-        .select("bb.band", "bb.bucket", "corpus_id"))
+    return (_lsh_bands(sigs, [id_col], num_hashes, bands)
+            .select("band", "bucket", F.col(id_col).alias("corpus_id")))
 
 
 def probe_candidates(index: DataFrame, batch: DataFrame,
@@ -677,15 +560,15 @@ def probe_candidates(index: DataFrame, batch: DataFrame,
                      shingle_n: int = 3) -> DataFrame:
     """The probe's candidate join on its own — batch bands (the same
     minhash_band_index arithmetic) equi-joined against the persisted
-    index. Exposed separately so the plan test can assert the
-    index-side zero-Exchange shape BEFORE the checkpoint that
-    minhash_probe_index puts above it truncates the executed plan."""
+    index, one (__bid, __cid) row per shared band. Exposed separately
+    so the plan test can assert the index-side zero-Exchange shape
+    BEFORE the checkpoint that minhash_probe_index puts above it
+    truncates the executed plan."""
     probes = (minhash_band_index(batch, text_col, id_col,
                                  num_hashes, bands, shingle_n)
               .withColumnRenamed("corpus_id", "__bid"))
     return (probes.join(index, on=["band", "bucket"])
-            .select("__bid", F.col("corpus_id").alias("__cid"))
-            .distinct())
+            .select("__bid", F.col("corpus_id").alias("__cid")))
 
 
 def minhash_probe_index(index: DataFrame, batch: DataFrame,
@@ -700,7 +583,10 @@ def minhash_probe_index(index: DataFrame, batch: DataFrame,
     candidate tail.
 
     `fetch_texts(ids_df) -> DataFrame(id_col, text_col)` supplies the
-    candidate corpus docs' texts. This is deliberately a callback, not
+    candidate corpus docs' texts. ``ids_df`` holds the distinct
+    candidate corpus ids in ``id_col``, broadcast-hinted under the
+    io.bcast_id_cap gate, so a semi-join lookup filters right above its
+    scan. This is deliberately a callback, not
     a corpus DataFrame: a left-semi join against the corpus would scan
     O(corpus) text per probe, which is exactly what the persisted
     index exists to avoid. In production this is a point-lookup
@@ -711,46 +597,19 @@ def minhash_probe_index(index: DataFrame, batch: DataFrame,
     minhash_lsh_incremental row-for-row (asserted in tests).
 
     Returns one row per batch doc: (id, dup_of, jaccard, is_dup)."""
-    if not jaccard_threshold > 0:
-        # ADVICE r16: the array verify would emit zero-intersection
-        # pairs at threshold <= 0 that the exploded form never did
-        raise ValueError(
-            f"jaccard_threshold must be > 0, got {jaccard_threshold!r}")
-    candidates = (probe_candidates(index, batch, text_col, id_col,
-                                   num_hashes, bands, shingle_n)
-                  # three consumers (two shingle sides + verify spine)
-                  .localCheckpoint(eager=False))
-    # size-gate for the batch-side broadcast below (r17, VERDICT r16
-    # ask #3 — io.bcast_id_cap documents the bound)
-    hint_ids = candidates.count() <= bcast_id_cap()
+    _require_positive_threshold(jaccard_threshold)
     batch = spread_for_compute(batch)
-
-    ctext = fetch_texts(candidates.select(
-        F.col("__cid").alias(id_col)).distinct())
-    # array-form exact verify (r16, same shape as minhash_lsh_pairs /
-    # minhash_lsh_incremental): one distinct-shingle-set array row per
-    # candidate doc, array_intersect per pair — no per-shingle rows,
-    # no per-side size aggregates
-    cset = ctext.select(F.col(id_col).alias("__cid"),
-                        F.array_distinct(shingles(text_col, shingle_n))
-                        .alias("sh_c"))
-    # broadcast the candidate-id tail so the batch side is filtered
-    # above its scan instead of exchanged (guide §3.2; same bound as
-    # the checkpoint above, size-gated per io.bcast_id_cap)
-    bids = candidates.select("__bid") \
-        .withColumnRenamed("__bid", id_col).distinct()
-    bset = (batch.join(F.broadcast(bids) if hint_ids else bids,
-                       on=id_col, how="left_semi")
-            .select(F.col(id_col).alias("__bid"),
-                    F.array_distinct(shingles(text_col, shingle_n))
-                    .alias("sh_b")))
-    paired = candidates.join(bset, on="__bid").join(cset, on="__cid")
-    n_inter = F.size(F.array_intersect("sh_b", "sh_c"))
-    jac = (paired
-           .withColumn("__j", n_inter / (F.size("sh_b") + F.size("sh_c")
-                                         - n_inter))
-           .filter(F.col("__j") >= jaccard_threshold))
-    best = (jac.groupBy("__bid")
+    candidates, bdocs, cdocs = _candidate_tail(
+        probe_candidates(index, batch, text_col, id_col,
+                         num_hashes, bands, shingle_n),
+        id_col, (batch, ("__bid",)), (fetch_texts, ("__cid",)))
+    verified = _verify_jaccard(candidates, ("__bid", bdocs, "sh_b"),
+                               ("__cid", cdocs, "sh_c"), id_col, text_col,
+                               shingle_n, jaccard_threshold, "__j")
+    # winner per batch doc = LEXICOGRAPHIC struct min: corpus ids are
+    # distinct within a group, so this is min(__cid) carrying its own
+    # pair's jaccard along — no second join to recover the score
+    best = (verified.groupBy("__bid")
             .agg(F.min(F.struct(F.col("__cid"), F.col("__j"))).alias("m"))
             .select(F.col("__bid").alias(id_col),
                     F.col("m.__cid").alias("dup_of"),

@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from data_warehouse_spark.io import bcast_id_cap, spread_for_compute
+from data_warehouse_spark.io import spread_for_compute
 
 # cosine_topk auto-kernel threshold on the optimizer's size estimate of
 # the input scan: below it the single-parse HOF expression wins (no
@@ -577,11 +577,11 @@ def cosine_lsh_pairs(df: DataFrame, vec_col: str, id_col: str,
     with p_bit = 1 - arccos(cos)/pi — 1 - 2e-10 at cos 0.99 for the
     128/8 default, tapering fast below the threshold.
 
-    Scale shape mirrors minhash_lsh_pairs: signature scan -> band
-    explode -> bucket equi-join -> distinct candidate pairs (the tiny
-    near-dup tail, lazily checkpointed because two consumers hang off
-    it) -> exact verify joined back to the embeddings of candidate ids
-    only (left-semi prefilter). Never a cross join; the quadratic term
+    Scale shape: signature scan -> band explode -> bucket equi-join ->
+    the MinHash family's candidate tail (dedup._candidate_tail:
+    distinct, lazy checkpoint, size-gated broadcast semi prefilter) ->
+    exact verify joined back to the embeddings of candidate ids only.
+    Never a cross join; the quadratic term
     is bounded by bucket occupancy, and at 100 TB the 2^band_bits
     bucket space per band keeps random collisions at n^2 / 2^band_bits
     per band only for vectors that genuinely agree on 8 sign bits —
@@ -591,6 +591,8 @@ def cosine_lsh_pairs(df: DataFrame, vec_col: str, id_col: str,
     signs) but their exact cosine is NaN, so the verify filter drops
     them — they are never reported, consistently with cosine_topk's
     NaN policy being confined to ranking."""
+    from data_warehouse_spark.operators.dedup import _candidate_tail
+
     df = spread_for_compute(df)
     fps = hyperplane_band_values(df, vec_col, id_col, num_bits,
                                  band_bits, seed)
@@ -598,31 +600,13 @@ def cosine_lsh_pairs(df: DataFrame, vec_col: str, id_col: str,
         id_col, F.posexplode("bands").alias("band", "val"))
     left = banded.withColumnRenamed(id_col, "id_a")
     right = banded.withColumnRenamed(id_col, "id_b")
-    candidates = (left.join(right, on=["band", "val"])
-                  .filter(F.col("id_a") < F.col("id_b"))
-                  .select("id_a", "id_b")
-                  .distinct()
-                  # two consumers below (semi-prefilter + verify join);
-                  # same lazy-checkpoint rationale as dedup.py
-                  .localCheckpoint(eager=False))
-    cand_ids = (candidates.select(F.col("id_a").alias(id_col))
-                .unionByName(candidates.select(F.col("id_b").alias(id_col)))
-                .distinct())
-    # broadcast the candidate-id tail (r16, guide §3.2): cand_ids
-    # derives from the checkpointed candidates (ExistingRDD, no size
-    # stats), so the planner otherwise sort-merges — exchanging the
-    # whole embeddings table on id just to keep the tail's rows. The
-    # bound is the same tail-smallness the checkpoint relies on, and
-    # strictly fewer bytes than the (id, vec) sides the verify join
-    # below already broadcasts. Size-gated (r17, VERDICT r16 ask #3 —
-    # io.bcast_id_cap documents the bound): above the cap the hint is
-    # dropped and the planner keeps the shuffle semi (slower, never
-    # fatal at adversarial collision rates).
-    if 2 * candidates.count() <= bcast_id_cap():
-        cand_ids = F.broadcast(cand_ids)
-    sided = (df.join(cand_ids, on=id_col, how="left_semi")
-             .select(F.col(id_col), F.col(vec_col),
-                     _norm(vec_col).alias("nrm")))
+    candidates, in_pairs = _candidate_tail(
+        left.join(right, on=["band", "val"])
+        .filter(F.col("id_a") < F.col("id_b"))
+        .select("id_a", "id_b"),
+        id_col, (df, ("id_a", "id_b")))
+    sided = in_pairs.select(F.col(id_col), F.col(vec_col),
+                            _norm(vec_col).alias("nrm"))
     a = sided.select(F.col(id_col).alias("id_a"),
                      F.col(vec_col).alias("va"), F.col("nrm").alias("na"))
     b = sided.select(F.col(id_col).alias("id_b"),

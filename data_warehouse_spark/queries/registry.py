@@ -124,15 +124,11 @@ def register(name: str, oracle: str | None = None, doc: str = "",
 
 def load_all() -> dict[str, QuerySpec]:
     """Import every query module (idempotent) and return the registry,
-    ordered DRIVER_WINDOW-first (the driver checks the first 50)."""
+    ordered DRIVER_WINDOW-first (the driver checks the first 50). A
+    missing or renamed module raises: swallowing it would silently drop
+    its queries from the registry."""
     for mod in _QUERY_MODULES:
-        try:
-            importlib.import_module(mod)
-        except ModuleNotFoundError as e:
-            # Allow partial builds while modules are still being written,
-            # but only swallow the module-itself-missing case.
-            if mod not in str(e):
-                raise
+        importlib.import_module(mod)
     windowed = [n for n in DRIVER_WINDOW if n in QUERIES]
     rest = [n for n in QUERIES if n not in set(windowed)]
     return {n: QUERIES[n] for n in (*windowed, *rest)}

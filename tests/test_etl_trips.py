@@ -45,6 +45,26 @@ def test_build_trips_ground_truth(spark):
     assert t.total_distance > 0
 
 
+def test_build_trips_keeps_exact_hour_trip(spark):
+    """A trip whose segment gaps sum to exactly 3,600 s is 60.0 minutes
+    and sits on the inclusive max_duration_min bound. Summed as float
+    minutes these gaps give 60.00000000000001 and the trip is dropped;
+    the duration must be summed exactly."""
+    t0 = dt.datetime(2024, 6, 3, 8, 0, 0)
+    gaps = [680, 725, 688, 643, 695, 169]
+    assert sum(gaps) == 3600
+    offsets = [0]
+    for g in gaps:
+        offsets.append(offsets[-1] + g)
+    rows = [Row(bike_id="h1", provider_id="p", lat=47.0 + i * 0.01,
+                lon=8.0, timestamp=t0 + dt.timedelta(seconds=off))
+            for i, off in enumerate(offsets)]
+    trips = build_trips(spark.createDataFrame(rows)).collect()
+    assert len(trips) == 1
+    assert trips[0].segment_count == 6
+    assert trips[0].total_duration == 60.0
+
+
 def test_run_incremental_idempotent(spark):
     base = tempfile.mkdtemp(prefix="dws_etl_")
     shutil.rmtree(base, ignore_errors=True)

@@ -115,7 +115,9 @@ def test_lsh_broadcast_gate_incremental_and_cosine(spark, sf_dir, monkeypatch):
     """Same gate on the other three sites (x2g incremental, probe,
     cosine LSH): cap 0 must flip them to the fallback with identical
     rows."""
-    from data_warehouse_spark.operators.dedup import minhash_lsh_incremental
+    from data_warehouse_spark.operators.dedup import (
+        minhash_band_index, minhash_lsh_incremental, minhash_probe_index,
+    )
     from data_warehouse_spark.operators.similarity import cosine_lsh_pairs
 
     docs = load_table(spark, sf_dir, "documents").limit(30) \
@@ -124,22 +126,29 @@ def test_lsh_broadcast_gate_incremental_and_cosine(spark, sf_dir, monkeypatch):
                         F.concat("text", F.lit(" t")).alias("text"))
     vecs = load_table(spark, sf_dir, "embeddings").limit(50)
 
+    def fetch(ids):
+        return docs.join(ids, on="doc_id", how="left_semi")
+
     def run_all():
         inc = sorted(map(tuple, minhash_lsh_incremental(
             docs, batch, "text", "doc_id").collect()))
+        prb = sorted(map(tuple, minhash_probe_index(
+            minhash_band_index(docs, "text", "doc_id"), batch, fetch,
+            "text", "doc_id").collect()))
         cos = sorted(map(tuple, cosine_lsh_pairs(
             vecs, "embedding", "vec_id", threshold=0.8).collect()))
-        return inc, cos
+        return inc, prb, cos
 
     before = run_all()
+    assert any(r[3] for r in before[1])       # the probe finds dups
     monkeypatch.setenv("SPARK_GRAFT_BCAST_ID_CAP", "0")
     assert run_all() == before
 
 
 def test_lsh_jaccard_threshold_must_be_positive(spark, sf_dir):
     """ADVICE r16: the array-form verify keeps zero-intersection pairs
-    until the threshold filter, so threshold <= 0 would diverge from
-    the exploded form — every entry point refuses it loudly."""
+    until the threshold filter, so threshold <= 0 would report every
+    banding collision as a dup — every entry point refuses it loudly."""
     from data_warehouse_spark.operators.dedup import (
         minhash_lsh_incremental, minhash_probe_index,
     )
@@ -1310,38 +1319,40 @@ def test_shared_spans_npasses_honors_caller_pass_dir(spark, tmp_path):
         == sorted(map(tuple, single.collect()))
 
 
-def test_minhash_verify_paths_identical(spark, sf_dir):
-    """The r16 "array" exact-verify path must be VALUE-IDENTICAL to
-    the original "explode" path — on the live fixture corpus, on the
-    blocked (block_col) form, and on a synthetic corpus with one very
-    long document (the regime the docstring routes to "explode")."""
+def test_minhash_lsh_pairs_match_exact_ngram_jaccard(spark, sf_dir):
+    """Every LSH pair must be a true pair of the exact path
+    (ngram_jaccard_pairs with max_block_rows=None: every pair sharing a
+    3-gram, no banding) with the SAME jaccard value — on the fixture
+    corpus (one constant block for the exact path), on the blocked
+    (block_col) form, and on a corpus with two very long documents."""
     from pyspark.sql import functions as F
 
     from data_warehouse_spark.io import load_table
+    from data_warehouse_spark.operators.dedup import ngram_jaccard_pairs
 
-    docs = load_table(spark, sf_dir, "documents")
+    def lsh(df, block_col=None):
+        return {r[:-1]: r.jaccard for r in minhash_lsh_pairs(
+            df, "text", "doc_id", num_hashes=32, bands=8,
+            jaccard_threshold=0.5, block_col=block_col).collect()}
 
-    def rows(df):
-        return sorted(tuple(r) for r in df.collect())
+    def exact(df, block_col, keep_block):
+        return {((r.block,) if keep_block else ()) + (r.id_a, r.id_b):
+                r.jaccard for r in ngram_jaccard_pairs(
+                    df, "text", "doc_id", block_col, n=3, threshold=0.5,
+                    max_block_rows=None).collect()}
 
-    arr = minhash_lsh_pairs(docs, "text", "doc_id", num_hashes=32,
-                            bands=8, jaccard_threshold=0.5,
-                            verify="array")
-    exp = minhash_lsh_pairs(docs, "text", "doc_id", num_hashes=32,
-                            bands=8, jaccard_threshold=0.5,
-                            verify="explode")
-    got = rows(arr)
-    assert got and got == rows(exp)
+    def assert_subset(got, want):
+        assert got and all(want.get(k) == j for k, j in got.items()), \
+            sorted(set(got.items()) - set(want.items()))
+
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    assert_subset(lsh(docs),
+                  exact(docs.withColumn("one", F.lit(0)), "one", False))
 
     blocked = docs.withColumn("lang_block",
                               (F.col("doc_id") % 3).cast("string"))
-    arr_b = minhash_lsh_pairs(blocked, "text", "doc_id", num_hashes=32,
-                              bands=8, jaccard_threshold=0.5,
-                              block_col="lang_block", verify="array")
-    exp_b = minhash_lsh_pairs(blocked, "text", "doc_id", num_hashes=32,
-                              bands=8, jaccard_threshold=0.5,
-                              block_col="lang_block", verify="explode")
-    assert rows(arr_b) == rows(exp_b)
+    assert_subset(lsh(blocked, "lang_block"),
+                  exact(blocked, "lang_block", True))
 
     # long-doc case: two near-identical ~12k-word docs plus a decoy
     base = " ".join(f"w{i % 997} t{i}" for i in range(6000))
@@ -1349,20 +1360,10 @@ def test_minhash_verify_paths_identical(spark, sf_dir):
         [(1, base), (2, base + " extra tail tokens here"),
          (3, "a completely different short text entirely")],
         "doc_id long, text string")
-    arr_l = rows(minhash_lsh_pairs(long_docs, "text", "doc_id",
-                                   num_hashes=32, bands=8,
-                                   jaccard_threshold=0.5,
-                                   verify="array"))
-    exp_l = rows(minhash_lsh_pairs(long_docs, "text", "doc_id",
-                                   num_hashes=32, bands=8,
-                                   jaccard_threshold=0.5,
-                                   verify="explode"))
-    assert arr_l == exp_l
-    assert [(a, b) for a, b, _ in arr_l] == [(1, 2)]
-
-    import pytest
-    with pytest.raises(ValueError, match="verify"):
-        minhash_lsh_pairs(docs, "text", "doc_id", verify="bogus")
+    got_l = lsh(long_docs)
+    assert sorted(got_l) == [(1, 2)]
+    assert_subset(got_l, exact(long_docs.withColumn("one", F.lit(0)),
+                               "one", False))
 
 
 def test_minhash_arrow_kernel_matches_expression_form(spark, sf_dir):

@@ -4,6 +4,9 @@ not an accident of import order. These tests pin it."""
 
 from __future__ import annotations
 
+import pytest
+
+from data_warehouse_spark.queries import registry
 from data_warehouse_spark.queries.registry import DRIVER_WINDOW, load_all
 
 # Round-17 window (standing stale-first + changed-query-first rules):
@@ -60,6 +63,16 @@ def test_window_names_resolve_and_lead_the_registry():
     assert not missing, (
         f"queries pushed out of the driver's 50-entry window: {missing}; "
         "check DRIVER_WINDOW in queries/registry.py")
+
+
+def test_load_all_fails_loudly_on_missing_module(monkeypatch):
+    """A deleted or renamed query module must raise, not silently drop
+    its queries from the registry."""
+    monkeypatch.setattr(registry, "_QUERY_MODULES", [
+        *registry._QUERY_MODULES,
+        "data_warehouse_spark.queries.no_such_module"])
+    with pytest.raises(ModuleNotFoundError, match="no_such_module"):
+        registry.load_all()
 
 
 def test_every_query_has_fn_and_all_have_oracles():
