@@ -1,17 +1,13 @@
-"""The reference's complete trip-reconstruction ETL as a reusable
-library (trips_lambda.py:90-246 re-architected Spark-first).
+"""The reference's trip reconstruction (trips_lambda.py:90-246) and
+the one Spark implementation of its chain, `trip_chain`.
 
-The reference pipeline: extract 24h of bike_status from source
-PostgreSQL via a 70-line SQL string, materialize the result in Lambda
-memory (fetchall), and execute_values-upsert into the warehouse — three
-network round-trips and a driver-memory cliff. Here the same semantics
-are one lazy DataFrame chain ending in a partition-scoped merge write:
-no row ever passes through the driver.
-
-At 100 TB: bike_status is parquet partitioned by dt=date(ts); the 24h
-incremental window prunes to 1-2 partitions; the window/groupBy
-shuffles hash on bike_id (AQE-skew-handled); the upsert rewrites only
-the date partitions the new trips touch.
+`build_trips` (the daily bike_status ETL) and the e-family's
+`queries.sessions.trips_fact_from` are adapters: each projects its input
+to pings and picks the window order, group keys and distance rounding.
+Where the reference fetchall()s 24h of rows into Lambda memory and
+upserts them back, here the run is one lazy chain ending in a
+partition-scoped merge write; at 100 TB the 24h window prunes to 1-2
+dt partitions and the window/groupBy shuffles hash on bike_id.
 """
 
 from __future__ import annotations
@@ -39,64 +35,59 @@ class TripConfig:
     local_tz: str = "Europe/Zurich"
 
 
-def build_trips(bike_status: DataFrame, cfg: TripConfig = TripConfig()) -> DataFrame:
-    """bike_status(bike_id, provider_id, lat, lon, timestamp[, ...]) ->
-    all_trips rows (trips_lambda.py:94-164, faithful semantics
-    including the one-trip-per-bike-per-window aggregation)."""
-    w = Window.partitionBy("bike_id").orderBy("timestamp")
-    local_time = to_local(F.col("timestamp"), cfg.local_tz)
+def trip_chain(pings: DataFrame, order_by: list[str], keys: list[str],
+               cfg: TripConfig = TripConfig(),
+               distance_dp: int | None = None) -> DataFrame:
+    """pings(bike_id, provider_id, time, lat, lon, *order_by) -> one
+    validated trip per `keys` group (trips_lambda.py:94-164): lag per
+    bike in `order_by` order -> gap/movement filter -> haversine ->
+    MIN/MAX/SUM/COUNT -> cfg's validity filter. With keys = [bike_id],
+    provider_id is MIN(provider_id); `distance_dp` rounds the distance
+    sum before its `> 0` filter."""
+    w = Window.partitionBy("bike_id").orderBy(*order_by)
+    lagged = pings.withColumns({
+        "prev_time": F.lag("time").over(w),
+        "prev_lat": F.lag("lat").over(w),
+        "prev_lon": F.lag("lon").over(w),
+    })
 
-    trip_data = bike_status.select(
-        "bike_id", "provider_id",
-        local_time.alias("local_time"),
-        "lat", "lon",
-        F.lag(local_time).over(w).alias("prev_time"),
-        F.lag("lat").over(w).alias("prev_lat"),
-        F.lag("lon").over(w).alias("prev_lon"),
-    )
-
-    # Reference-faithful, DELIBERATELY: the reference computes gaps on
-    # the DST-shifted local wall clock (EXTRACT(EPOCH FROM (local_time
-    # - prev_time)), trips_lambda.py:118,128), so segments spanning a
-    # Europe/Zurich DST transition mis-measure by ±1h there and here
-    # alike (spring-forward drops a real 10-min segment as >1h;
-    # fall-back yields a negative gap). A UTC-gap variant would just be
-    # gap over `timestamp` — kept identical to the reference (and the
-    # e1 oracle) instead, because trip parity is the contract.
-    gap_us = F.unix_micros("local_time") - F.unix_micros("prev_time")
-    gap_s = gap_us / 1e6
-    trip_segments = (
-        trip_data
+    # Reference-faithful, DELIBERATELY: build_trips' `time` is the DST-
+    # shifted local wall clock the reference subtracts (trips_lambda.py:
+    # 118,128), so a segment spanning a Europe/Zurich DST switch is off
+    # by ±1h there and here alike.
+    gap_us = F.unix_micros("time") - F.unix_micros("prev_time")
+    segments = (
+        lagged
         .filter(F.col("prev_time").isNotNull()
-                & gap_s.between(cfg.min_gap_s, cfg.max_gap_s)
+                & (gap_us / 1e6).between(cfg.min_gap_s, cfg.max_gap_s)
                 & ((F.col("prev_lat") != F.col("lat"))
                    | (F.col("prev_lon") != F.col("lon"))))
         .select(
             "bike_id", "provider_id",
-            F.col("local_time").alias("end_time"),
+            F.col("time").alias("end_time"),
             F.col("prev_time").alias("start_time"),
             F.col("prev_lat").alias("start_lat"), F.col("prev_lon").alias("start_lon"),
             F.col("lat").alias("end_lat"), F.col("lon").alias("end_lon"),
-            # integer microseconds until after the SUM: integer addition
-            # is exact in any order, so a trip of exactly 60 min sums to
-            # exactly 60.0 and stays inside the duration bound (a float
-            # minutes sum can give 60.00000000000001 and drop it)
+            # integer µs until after the SUM: exact in any order, so an
+            # exactly-60-min trip stays inside the inclusive bound
             gap_us.alias("duration_us"),
             haversine_km(F.col("prev_lat"), F.col("prev_lon"),
                          F.col("lat"), F.col("lon")).alias("distance_km"),
         )
     )
 
-    # MIN/MAX per coordinate COLUMN, independently — also reference-
-    # faithful (trips_lambda.py:139-142: MIN(start_lat), MIN(start_lon)
-    # ...), even though it can fabricate a start point no segment had
-    # (lat from one segment, lon from another). min_by(start_lat,
-    # start_time) pairs would give the true first point; the reference's
-    # exact aggregate is kept because the e1 oracle checks parity with
-    # it.
-    trips = (
-        trip_segments.groupBy("bike_id", "provider_id")
-        .agg(F.min("start_time").alias("trip_start"),
+    # MIN/MAX per coordinate column, independently, as the reference
+    # does (trips_lambda.py:139-142), even though that can pair a lat
+    # and a lon from different segments.
+    distance = F.sum("distance_km")
+    if distance_dp is not None:
+        distance = F.round(distance, distance_dp)
+    provider = [] if "provider_id" in keys else [
+        F.min("provider_id").alias("provider_id")]
+    return (
+        segments.groupBy(*keys)
+        .agg(*provider,
+             F.min("start_time").alias("trip_start"),
              F.max("end_time").alias("trip_end"),
              F.min("start_lat").alias("start_lat"),
              F.min("start_lon").alias("start_lon"),
@@ -104,14 +95,25 @@ def build_trips(bike_status: DataFrame, cfg: TripConfig = TripConfig()) -> DataF
              F.max("end_lon").alias("end_lon"),
              (F.sum("duration_us") / F.lit(60000000.0))
              .alias("total_duration"),
-             F.sum("distance_km").alias("total_distance"),
+             distance.alias("total_distance"),
              F.count(F.lit(1)).alias("segment_count"))
         .filter(F.col("total_duration").between(cfg.min_duration_min,
                                                 cfg.max_duration_min)
                 & (F.col("total_distance") > 0)
                 & (F.col("segment_count") >= cfg.min_segments))
     )
-    return trips
+
+
+def build_trips(bike_status: DataFrame, cfg: TripConfig = TripConfig()) -> DataFrame:
+    """bike_status(bike_id, provider_id, lat, lon, timestamp[, ...]) ->
+    all_trips rows: times on the cfg.local_tz wall clock, lag ordered by
+    the UTC `timestamp`, one trip per (bike_id, provider_id) per window."""
+    pings = bike_status.select(
+        "bike_id", "provider_id",
+        to_local(F.col("timestamp"), cfg.local_tz).alias("time"),
+        "lat", "lon", "timestamp")
+    return trip_chain(pings, order_by=["timestamp"],
+                      keys=["bike_id", "provider_id"], cfg=cfg)
 
 
 def run_incremental(spark: SparkSession, source_path: str, target_path: str,

@@ -1,4 +1,2 @@
 from data_warehouse_spark.functions.geo import haversine_km  # noqa: F401
-from data_warehouse_spark.functions.timeutils import (  # noqa: F401
-    duration_minutes, duration_seconds, to_local,
-)
+from data_warehouse_spark.functions.timeutils import to_local  # noqa: F401

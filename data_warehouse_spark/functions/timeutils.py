@@ -21,18 +21,3 @@ def to_local(ts: Column, tz: str = LOCAL_TZ) -> Column:
     (trips_lambda.py:99,102).
     """
     return F.from_utc_timestamp(ts, tz)
-
-
-def duration_seconds(start: Column, end: Column) -> Column:
-    """Exact difference in seconds (double, sub-second precise).
-
-    Reference: EXTRACT(EPOCH FROM (t2-t1)) (trips_lambda.py:118,128).
-    unix_micros keeps integer arithmetic until the final division, so
-    there is no float drift against SQL engines that do the same.
-    """
-    return (F.unix_micros(end) - F.unix_micros(start)) / F.lit(1_000_000.0)
-
-
-def duration_minutes(start: Column, end: Column) -> Column:
-    """Reference: EXTRACT(EPOCH FROM (end-start))/60.0 (trips_lambda.py:118)."""
-    return duration_seconds(start, end) / F.lit(60.0)

@@ -188,26 +188,3 @@ def write_partitioned(df: DataFrame, path: str, ts_col: str | None = None,
         writer.write.mode(mode).partitionBy("dt").parquet(path)
     else:
         writer.write.mode(mode).parquet(path)
-
-
-def write_bucketed(df: DataFrame, table: str, path: str, key: str,
-                   n_buckets: int = 32, sort_cols: list[str] | None = None) -> None:
-    """Write a table bucketed (and sorted) on a hot key.
-
-    Buckets pre-shuffle the data at write time: every later window /
-    groupBy / join keyed on `key` reads co-located, pre-sorted buckets
-    and skips its exchange entirely (verified in tests/test_plans.py).
-    For the sessionization workload this removes the one shuffle the
-    W5/E1 plans contain — the repeated-daily-run optimization the
-    reference approximates with its B-tree index on (bike_id, ts)
-    (trips_lambda.py:81-84).
-
-    Thin single-key wrapper over operators.bucketing.write_bucketed —
-    one implementation owns the load-bearing mechanics (the
-    pre-repartition that gives one file per bucket, without which the
-    scan cannot report sort order, plus the DROP TABLE guard)."""
-    from data_warehouse_spark.operators.bucketing import (
-        write_bucketed as _write_bucketed,
-    )
-    _write_bucketed(df, table, path, keys=[key], n_buckets=n_buckets,
-                    sort=True, sort_keys=sort_cols or [key])

@@ -41,7 +41,7 @@ def upsert(old: DataFrame, new: DataFrame, keys: list[str],
     key) must hold even when one batch carries the same key twice, so
     `new` is key-deduplicated here — when `order_col` is given the
     highest value wins (deterministic); otherwise an arbitrary single
-    row survives (dropDuplicates), matching dedup_by_key semantics.
+    row survives (dropDuplicates).
 
     ``new_unique=True`` asserts the batch is ALREADY key-unique (e.g.
     it derives from a PK-constrained source) and skips the dedup. The
@@ -90,12 +90,6 @@ def dedup_latest(df: DataFrame, keys: list[str], order_col: str,
     w = Window.partitionBy(*[_qcol(k) for k in keys]).orderBy(*order)
     return (df.withColumn("__rn", F.row_number().over(w))
             .filter(F.col("__rn") == 1).drop("__rn"))
-
-
-def dedup_by_key(df: DataFrame, keys: list[str]) -> DataFrame:
-    """PK-rejection dedup (bike_lambda.py:46): arbitrary-but-single row
-    per key, as dropDuplicates."""
-    return df.dropDuplicates(keys)
 
 
 def scd2_apply(dim: DataFrame, updates: DataFrame, keys: list[str],

@@ -25,8 +25,7 @@ from pyspark.sql import functions as F
 
 def with_session_id(df: DataFrame, key: str, ts: str, gap_seconds: float,
                     order_tiebreak: str | None = None,
-                    out_col: str = "session_id",
-                    gap_closed: bool = False) -> DataFrame:
+                    out_col: str = "session_id") -> DataFrame:
     """Add a per-key session id (1-based) via lag + running sum of breaks.
 
     A new session starts at the first observation of a key and whenever
@@ -34,23 +33,19 @@ def with_session_id(df: DataFrame, key: str, ts: str, gap_seconds: float,
     semantics (trips_lambda.py:102-104,128) without its one-trip-per-
     window simplification.
 
-    ``gap_closed=True`` breaks on gap >= gap_seconds instead of > —
-    the boundary convention of Spark's session_window (its window end
-    is exclusive at last_event + gap), so a lag-chain built with it
-    assigns exactly session_window's groups (r17: st4 computes its
-    session aggregate through this form — identical rows, ~10-20%
-    faster at 64x/256x than the native batch operator on this data
-    shape; see OPTIMIZATION_r17.md).
+    A gap of exactly gap_seconds continues the session, as in Spark's
+    session_window (it merges an event at last_event + gap into the
+    open session), so these ids group rows exactly as session_window
+    does (tests/test_sessionize.py). st4 computes its session aggregate
+    this way: ~10-20% faster at 64x/256x than the native batch operator
+    on this data shape (OPTIMIZATION_r17.md).
     """
     order_cols = [ts] + ([order_tiebreak] if order_tiebreak else [])
     w = Window.partitionBy(key).orderBy(*order_cols)
     prev_ts = F.lag(ts).over(w)
     gap_us = F.unix_micros(F.col(ts)) - F.unix_micros(prev_ts)
     gap_lim = F.lit(int(gap_seconds * 1_000_000))
-    is_break: Column = (
-        prev_ts.isNull()
-        | ((gap_us >= gap_lim) if gap_closed else (gap_us > gap_lim))
-    ).cast("int")
+    is_break: Column = (prev_ts.isNull() | (gap_us > gap_lim)).cast("int")
     # Running sum of break flags over the same window partitioning ->
     # no extra shuffle beyond the one the lag already required (derived
     # from the same spec so the two can never order differently).

@@ -76,12 +76,17 @@ _QUERY_MODULES = [
 #       windowed although its final fingerprint matches the boundary:
 #       scd2_apply was rewritten, measured, and REVERTED mid-round
 #       (the split lost its A/Bs — OPTIMIZATION_r17.md #3), and the
-#       churned operator earns driver re-verification.
+#       churned operator earns driver re-verification. Then e1, e1b,
+#       e1c and e4, whose fact now comes from etl.trips.trip_chain,
+#       the one trip chain shared with build_trips (e2, e2b and e3
+#       changed too and are already in (a)); st4/w5 also lost
+#       with_session_id's gap_closed mode (session_window joins a gap
+#       of exactly 4 h, so the mode's >= break did not match it).
 #   (c) r14-cohort backfill, stale-first per tools/rotation.py:
-#       the first 17 of the 39 r14-dated rows in rotation order.
-# 22 + 11 + 17 = 50. The 22 r14 rows displaced by the budget (lead
-# the r18 window per the standing rule) start at mm1_multimodal_stub
-# in the rotation.py stale-first order.
+#       the first 13 of the 39 r14-dated rows in rotation order.
+# 22 + 15 + 13 = 50. The 26 r14 rows displaced by the budget (lead
+# the r18 window per the standing rule) start at x5c_quality_score
+# in the post-r16 rotation.py stale-first order.
 DRIVER_WINDOW = [
     # (a) the 22 r13-dated rows — oldest cohort re-enters first
     "e3_enriched_trips", "e2_carbon_savings", "e2b_carbon_bucketed",
@@ -96,13 +101,14 @@ DRIVER_WINDOW = [
     "mm2_image_resize", "x2_minhash_lsh", "x2c_ngram_jaccard",
     "x2d_cosine_lsh", "x2f_minhash_sparse", "x2g_incremental_minhash",
     "x8_dup_components", "x12_dedup_corpus",
-    # (c) r14-cohort backfill (stale-first; 17 of 39)
+    "e1_trips", "e1b_bucketed_trips", "e1c_trips_localtime",
+    "e4_daily_run",
+    # (c) r14-cohort backfill (stale-first; 13 of 39)
     "dq1_validation_report", "dq1b_validation_sketch", "u6_compaction",
     "u3_microbatch_write", "udf3_grouped_pandas", "udf4_udtf_words",
     "j9_spatial_join", "x1_exact_dedup", "x2e_incremental_dedup",
     "x14_token_budget_sample", "x14b_token_budget_scalable",
-    "x5_text_stats", "x5b_lang_id", "x5c_quality_score",
-    "x6_token_freq", "x7_tfidf", "x10_repetition_filter",
+    "x5_text_stats", "x5b_lang_id",
 ]
 # As of round 9 EVERY registry query carries a DuckDB value oracle.
 # Queries added or code-changed DURING round 17 must be appended to

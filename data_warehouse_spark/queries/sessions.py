@@ -9,10 +9,12 @@ derived from numeric columns so the haversine path is exercised.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from data_warehouse_spark.functions.geo import haversine_km, haversine_km_sql
+from data_warehouse_spark.etl.trips import trip_chain
+from data_warehouse_spark.functions.geo import haversine_km_sql
+from data_warehouse_spark.functions.timeutils import LOCAL_TZ, to_local
 from data_warehouse_spark.io import load_table
 from data_warehouse_spark.operators.sessionize import sessionize
 from data_warehouse_spark.queries.registry import register
@@ -239,7 +241,8 @@ FROM trips_fact
 ORDER BY trip_start
 """,
     doc="E1: the reference's full trip-reconstruction ETL query "
-        "(trips_lambda.py:94-164) re-expressed as one DataFrame chain: "
+        "(trips_lambda.py:94-164) through etl.trips.trip_chain, the one "
+        "Spark trip chain the daily ETL's build_trips also runs: "
         "scan -> lag window -> gap/movement filter -> haversine -> "
         "group-agg -> validity filter -> sort. Deviation: provider_id is "
         "MIN(event_type) per bike (the fixture's event_type is not "
@@ -270,14 +273,14 @@ ORDER BY trip_start
         "DST transition they shift by ±1h — reference behavior, "
         "reproduced, not fixed. The lag window still orders by the UTC "
         "instant (the reference orders by `timestamp`); local time "
-        "would be non-monotonic through a fall-back.",
+        "would be non-monotonic through a fall-back. This is exactly "
+        "build_trips' clock and order, run through the same "
+        "etl.trips.trip_chain.",
     tags=("flagship", "etl"),
 )
 def e1c_trips_localtime(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = (events_with_cohort(spark, sf_dir)
-              .withColumn("__utc_ts", F.col("ts"))
-              .withColumn("ts", F.from_utc_timestamp("ts", "Europe/Zurich")))
-    return _present_sorted(trips_fact_from(events, order_col="__utc_ts"))
+    return _present_sorted(trips_fact_from(events_with_cohort(spark, sf_dir),
+                                           tz=LOCAL_TZ))
 
 
 def _present_sorted(fact: DataFrame) -> DataFrame:
@@ -320,65 +323,27 @@ def trips_fact(spark: SparkSession, sf_dir: str) -> DataFrame:
     return trips_fact_from(events_with_cohort(spark, sf_dir))
 
 
-def trips_fact_from(events: DataFrame, order_col: str = "ts") -> DataFrame:
-    """trips_fact over an arbitrary events DataFrame (plain or
-    bucketed scan — e1b passes the bucketed layout through here).
-
-    `order_col` is the window ordering column; e1c passes the original
-    UTC instant while `ts` carries the Europe/Zurich wall clock, so the
-    lag runs in the reference's order (trips_lambda.py:101 orders by
-    `timestamp`, not the converted local_time)."""
-    lat = (F.col("value") % 90).alias("lat")
-    lon = ((F.col("event_id") % 36000) / 100.0 - 180.0).alias("lon")
-
-    w = Window.partitionBy("bike_id").orderBy(order_col, "event_id")
-    trip_data = events.select(
-        F.col("user_id").alias("bike_id"), "event_type", "ts", "event_id", lat, lon,
-        *([order_col] if order_col != "ts" else []),
-    ).withColumns({
-        "prev_time": F.lag("ts").over(w),
-        "prev_lat": F.lag("lat").over(w),
-        "prev_lon": F.lag("lon").over(w),
-    })
-
-    gap_sec = (F.unix_micros("ts") - F.unix_micros("prev_time")) / 1_000_000.0
-    trip_segments = (
-        trip_data
-        .filter(F.col("prev_time").isNotNull()
-                & gap_sec.between(60, 3600)
-                & ((F.col("prev_lat") != F.col("lat"))
-                   | (F.col("prev_lon") != F.col("lon"))))
-        .select(
-            "bike_id", "event_type",
-            F.col("ts").alias("end_time"), F.col("prev_time").alias("start_time"),
-            F.col("prev_lat").alias("start_lat"), F.col("prev_lon").alias("start_lon"),
-            F.col("lat").alias("end_lat"), F.col("lon").alias("end_lon"),
-            # keep durations in integer microseconds until after the SUM:
-            # integer addition is order-independent, so the aggregate is
-            # bit-exact across engines and shuffle orders (a float sum
-            # then round() can straddle a decimal rounding boundary).
-            (F.unix_micros("ts") - F.unix_micros("prev_time")).alias("seg_us"),
-            haversine_km(F.col("prev_lat"), F.col("prev_lon"),
-                         F.col("lat"), F.col("lon")).alias("distance_km"),
-        )
-    )
-
-    trip_aggregates = trip_segments.groupBy("bike_id").agg(
-        F.min("event_type").alias("provider_id"),
-        F.min("start_time").alias("trip_start"),
-        F.max("end_time").alias("trip_end"),
-        F.min("start_lat").alias("start_lat"),
-        F.min("start_lon").alias("start_lon"),
-        F.max("end_lat").alias("end_lat"),
-        F.max("end_lon").alias("end_lon"),
-        (F.sum("seg_us") / F.lit(60000000.0)).alias("total_duration"),
-        F.round(F.sum("distance_km"), 6).alias("total_distance"),
-        F.count(F.lit(1)).alias("segment_count"),
-    )
-
-    return trip_aggregates.filter(
-        (F.col("total_duration") >= 1) & (F.col("total_duration") <= 60)
-        & (F.col("total_distance") > 0) & (F.col("segment_count") >= 2))
+def trips_fact_from(events: DataFrame, tz: str | None = None) -> DataFrame:
+    """trips_fact over any events frame (plain, bucketed or day-window
+    scan) through etl.trips.trip_chain: lag ordered by (ts, event_id),
+    one trip per bike, provider_id = MIN(event_type), distance to 6 dp.
+    `tz` puts trip times on that zone's wall clock (e1c) while the lag
+    keeps the UTC order, as the reference orders by `timestamp`."""
+    # a UTC clock orders by `time` itself: a separate `ts` would read a
+    # scan-normalized ts twice and cost the plan a second Project
+    if tz is None:
+        clock, order = [F.col("ts").alias("time")], "time"
+    else:
+        clock, order = [to_local(F.col("ts"), tz).alias("time"), "ts"], "ts"
+    pings = events.select(
+        F.col("user_id").alias("bike_id"),
+        F.col("event_type").alias("provider_id"),
+        *clock,
+        (F.col("value") % 90).alias("lat"),
+        ((F.col("event_id") % 36000) / 100.0 - 180.0).alias("lon"),
+        "event_id")
+    return trip_chain(pings, order_by=[order, "event_id"], keys=["bike_id"],
+                      distance_dp=6)
 
 
 @register(

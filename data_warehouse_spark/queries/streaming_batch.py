@@ -97,7 +97,7 @@ WITH lagged AS (
     FROM events
 ), flagged AS (
     SELECT *, CASE WHEN prev_ts IS NULL
-                     OR (epoch_us(ts) - epoch_us(prev_ts)) >= 14400000000
+                     OR (epoch_us(ts) - epoch_us(prev_ts)) > 14400000000
                    THEN 1 ELSE 0 END AS is_break
     FROM lagged
 ), ids AS (
@@ -112,10 +112,10 @@ SELECT MIN(ts) AS sess_start,
 FROM ids GROUP BY user_id, sid
 """,
     doc="ST4: session-window aggregate with session_window SEMANTICS "
-        "(gap >= threshold breaks — window end is exclusive at "
-        "last_event + gap — vs W5's strict >; both semantics are "
-        "offered). r17: computed through the lag-chain "
-        "(with_session_id gap_closed=True) instead of the native "
+        "(gap > threshold breaks: session_window merges an event at "
+        "exactly last_event + gap into the open session, the same "
+        "boundary as W5). r17: computed through the lag-chain "
+        "(with_session_id) instead of the native "
         "batch session_window operator — identical rows (the oracle "
         "IS the lag-chain SQL), but the native form runs "
         "UpdatingSessionsIterator with a sort on BOTH sides of its "
@@ -134,8 +134,7 @@ def st4_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = load_table(spark, sf_dir, "events")
     ids = with_session_id(ev, key="user_id", ts="ts",
-                          gap_seconds=4 * 3600, gap_closed=True,
-                          out_col="__sid")
+                          gap_seconds=4 * 3600, out_col="__sid")
     return (ids.groupBy("user_id", "__sid")
             .agg(F.min("ts").alias("sess_start"),
                  (F.max("ts") + F.expr("INTERVAL 4 HOURS"))

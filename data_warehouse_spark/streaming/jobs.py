@@ -98,14 +98,6 @@ def tumbling_counts(events: DataFrame, size: str = "1 day",
             .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("sum_value")))
 
 
-def sliding_counts(events: DataFrame, size: str = "24 hours",
-                   slide: str = "6 hours", watermark: str = "1 hour") -> DataFrame:
-    """ST3: sliding-window aggregate (24h window recomputed periodically)."""
-    return (events.withWatermark("ts", watermark)
-            .groupBy(F.window("ts", size, slide).alias("win"), "user_id")
-            .agg(F.count(F.lit(1)).alias("n")))
-
-
 def session_aggs(events: DataFrame, gap: str = "4 hours",
                  watermark: str = "1 hour") -> DataFrame:
     """ST4: session-window aggregation — streaming W5."""

@@ -106,3 +106,55 @@ def test_e3_enriched_trips_schema_and_semantics(spark, sf_dir):
             assert r.temperature is None and r.aqi is None
         # vehicle_type dim covers every provider_id in the fixture
         assert r.vehicle_type is not None
+
+
+def test_trips_fact_from_matches_e1_oracle_on_edge_inputs(spark):
+    """The shared trip chain on inputs the driver fixtures never hold,
+    checked row for row against the e1 oracle's DuckDB chain:
+      - bike 1 has two pings at the same ts, ordered only by event_id
+        (the other order pairs different points and changes MIN(start_lat));
+      - bike 2 rides exactly 60 min (kept: the bound is inclusive);
+      - bike 3 rides 60 min + 1 s (dropped);
+      - bike 4 has a tied ping that does not move (a 0 s gap, filtered)."""
+    import duckdb
+
+    from data_warehouse_spark.queries.sessions import (
+        _E1_FACT_SQL, _PLANTED_COLS, _planted_events_df, trips_fact_from,
+    )
+    from tools.parity import compare
+
+    t0 = dt.datetime(2024, 5, 6, 7, 0, 0)
+
+    def at(s):
+        return t0 + dt.timedelta(seconds=s)
+
+    rows = [
+        (1, "click", at(0), 1.0, 10),
+        (1, "click", at(300), 3.0, 21),
+        (1, "click", at(300), 2.0, 20),
+        (1, "view", at(600), 4.0, 30),
+    ]
+    for bike, gaps in ((2, [680, 725, 688, 643, 695, 169]),
+                       (3, [680, 725, 688, 643, 695, 170])):
+        off = 0
+        for i, g in enumerate([0, *gaps]):
+            off += g
+            rows.append((bike, "error", at(off), 10.0 + bike + i, 1000 * bike + i))
+    rows += [(4, "view", at(0), 5.0, 40), (4, "view", at(120), 6.0, 41),
+             (4, "view", at(120), 6.0, 42), (4, "view", at(240), 7.0, 43)]
+    schema = "user_id long, event_type string, ts timestamp, value double, event_id long"
+    events = spark.createDataFrame(rows, schema)
+
+    got = trips_fact_from(
+        events.unionByName(_planted_events_df(spark))).toPandas()
+
+    con = duckdb.connect()
+    con.register("events_rows", events.select(*_PLANTED_COLS).toPandas())
+    con.sql("CREATE VIEW events AS SELECT * FROM events_rows")
+    want = con.sql(_E1_FACT_SQL + "SELECT * FROM trips_fact").df()
+
+    ok, msg = compare(got, want)
+    assert ok, msg
+    bikes = dict(zip(got.bike_id, got.total_duration))
+    assert bikes[2] == 60.0 and 3 not in bikes
+    assert {1, 4} <= set(bikes)

@@ -91,12 +91,13 @@ def test_bucketed_table_removes_sessionization_shuffle(spark, tmp_path):
     needs ZERO exchanges (vs 1 on the plain parquet scan)."""
     from pyspark.sql import Window, functions as F
 
-    from data_warehouse_spark.io import load_table, write_bucketed
+    from data_warehouse_spark.io import load_table
+    from data_warehouse_spark.operators.bucketing import write_bucketed
 
     ev = load_table(spark, SF, "events")
     spark.sql("DROP TABLE IF EXISTS ev_bucketed_test")
     write_bucketed(ev, "ev_bucketed_test", str(tmp_path / "evb"),
-                   key="user_id", n_buckets=8, sort_cols=["user_id", "ts"])
+                   keys=["user_id"], n_buckets=8, sort_keys=["user_id", "ts"])
 
     w = Window.partitionBy("user_id").orderBy("ts")
 

@@ -12,7 +12,8 @@ from data_warehouse_spark.queries.registry import DRIVER_WINDOW, load_all
 # Round-17 window (standing stale-first + changed-query-first rules):
 # the full 22-row r13 cohort first (oldest last-green per
 # tools/rotation.py), then the 11 round-17 code-changed queries (the
-# fingerprint diff vs the r16 round boundary), then r14-cohort
+# fingerprint diff vs the r16 round boundary) and the four e-queries
+# whose fact moved onto etl.trips.trip_chain, then r14-cohort
 # backfill to 50. Composition rationale lives next to DRIVER_WINDOW
 # in queries/registry.py; the "every changed query is windowed" half
 # is machine-checked by tests/test_window_integrity.py and the
@@ -36,13 +37,15 @@ MUST_BE_WINDOWED = {
     "mm2_image_resize", "x2_minhash_lsh", "x2c_ngram_jaccard",
     "x2d_cosine_lsh", "x2f_minhash_sparse", "x2g_incremental_minhash",
     "x8_dup_components", "x12_dedup_corpus",
-    # (c) r14-cohort backfill (stale-first, first 17)
+    # e-family fact moved onto the one trip chain (etl.trips.trip_chain)
+    "e1_trips", "e1b_bucketed_trips", "e1c_trips_localtime",
+    "e4_daily_run",
+    # (c) r14-cohort backfill (stale-first, first 13)
     "dq1_validation_report", "dq1b_validation_sketch", "u6_compaction",
     "u3_microbatch_write", "udf3_grouped_pandas", "udf4_udtf_words",
     "j9_spatial_join", "x1_exact_dedup", "x2e_incremental_dedup",
     "x14_token_budget_sample", "x14b_token_budget_scalable",
-    "x5_text_stats", "x5b_lang_id", "x5c_quality_score",
-    "x6_token_freq", "x7_tfidf", "x10_repetition_filter",
+    "x5_text_stats", "x5b_lang_id",
 }
 
 

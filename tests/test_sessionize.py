@@ -52,3 +52,37 @@ def test_sessionize_invariant_gaps_bounded(spark, sf_dir):
     assert len(out) > 0
     for r in out:
         assert r.duration_sec <= (r.n_events - 1) * 14400
+
+
+def test_session_ids_match_session_window(spark, sf_dir):
+    """with_session_id assigns exactly the groups of
+    F.session_window(ts, '4 hours') over the events fixture plus one
+    planted user whose gaps sit on and around the 4 h bound: a gap of
+    exactly 4 h continues the session in both, 4 h + 1 µs splits it."""
+    from pyspark.sql import functions as F
+
+    from data_warehouse_spark.io import load_table
+
+    t0 = dt.datetime(2024, 2, 1, 0, 0, 0)
+    offsets = [dt.timedelta(hours=h) for h in (0, 4, 8)] + [
+        dt.timedelta(hours=12, microseconds=1),
+        dt.timedelta(hours=16), dt.timedelta(hours=16)]
+    planted = spark.createDataFrame(
+        [(-1, t0 + off, -(i + 1)) for i, off in enumerate(offsets)],
+        "user_id long, ts timestamp, event_id long")
+    events = (load_table(spark, sf_dir, "events")
+              .select("user_id", "ts", "event_id").unionByName(planted))
+
+    def groups(df, key):
+        return {(r.user_id, frozenset(r.ids)) for r in
+                df.groupBy("user_id", key)
+                .agg(F.collect_list("event_id").alias("ids")).collect()}
+
+    lag_chain = groups(with_session_id(events, "user_id", "ts", 14400,
+                                       order_tiebreak="event_id"),
+                       "session_id")
+    native = groups(events, F.session_window("ts", "4 hours"))
+    assert lag_chain == native
+    assert (-1, frozenset({-1, -2, -3})) in native     # exact 4 h gaps join
+    assert (-1, frozenset({-4, -5, -6})) in native     # 4 h + 1 µs splits
+    assert any(len(ids) > 1 for u, ids in native if u >= 0)

@@ -234,6 +234,25 @@ def test_mm2_scan_prunes_blob_column(spark):
     assert bad == 0
 
 
+def test_png_blob_table_ignores_pre_hdr_cache(spark, tmp_path):
+    """A persistent `base` may hold a table landed before the `hdr`
+    column existed, at the digest of (sf_dir, mtime) alone. The layout
+    tag in the cache key must keep it from being served."""
+    import hashlib
+    import os
+
+    from data_warehouse_spark.operators.multimodal import png_blob_table
+
+    base = str(tmp_path / "png_cache")
+    mtime = int(os.path.getmtime(f"{SF}/documents.parquet"))
+    old_digest = hashlib.md5(f"{SF}|{mtime}".encode()).hexdigest()[:8]
+    spark.createDataFrame([(1, bytearray(b"\x89PNG"))], "doc_id long, blob binary") \
+        .write.parquet(f"{base}/{old_digest}/png_blobs.parquet")
+    tbl = png_blob_table(spark, SF, base=base)
+    assert "hdr" in tbl.columns
+    assert tbl.count() > 1
+
+
 def test_decode_images_stub_prunes_blob_via_n_bytes_col(spark):
     """The stub codec's dims are a pure function of payload length;
     when the source table already carries n_bytes (attach_blob /

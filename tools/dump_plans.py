@@ -5,17 +5,32 @@ Usage: python tools/dump_plans.py --out plans/r16 --suffix before [--sf DIR] Q [
 
 Writes plans/r16/<query>_<suffix>.txt for each query — the judge-facing
 plan evidence for optimization rounds (OPTIMIZATION_r16.md contract).
+Per-session counters (`#NNN` exprIds, `RDD[N]`, `plan_id=N`) are
+normalized, so two trees' dumps compare with a plain `diff -r`.
 """
 
 from __future__ import annotations
 
 import argparse
+import re
 import sys
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from data_warehouse_spark.queries.registry import load_all  # noqa: E402
+
+
+_COUNTERS = [(re.compile(r"#\d+"), "#N"),
+             (re.compile(r"RDD\[\d+\]"), "RDD[N]"),
+             (re.compile(r"plan_id=\d+"), "plan_id=N")]
+
+
+def normalize(plan: str) -> str:
+    """Replace the session-specific id counters in a plan string."""
+    for pat, repl in _COUNTERS:
+        plan = pat.sub(repl, plan)
+    return plan
 
 
 def main() -> int:
@@ -42,8 +57,8 @@ def main() -> int:
         df = specs[name].fn(spark, args.sf)
         # _sc / _jdf internals are stable across Spark 3.x/4.x and are
         # the only way to capture explain() output without stdout games
-        plan = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted")
+        plan = normalize(df._sc._jvm.PythonSQLUtils.explainString(
+            df._jdf.queryExecution(), "formatted"))
         path = out_dir / f"{name}_{args.suffix}.txt"
         path.write_text(plan)
         print(f"wrote {path} ({len(plan)} bytes)")

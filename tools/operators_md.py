@@ -146,8 +146,6 @@ SCALE_NOTES = {
     "merge.dedup_latest":
         "window-free max-struct per key — single shuffle, map-side "
         "combine",
-    "merge.dedup_by_key":
-        "dropDuplicates — Spark's native partial-agg dedup",
     "merge.scd2_apply":
         "joins batch vs CURRENT slice only (history never rescanned); "
         "closes + inserts in one write",
@@ -322,9 +320,6 @@ SCALE_NOTES = {
     "jobs.tumbling_counts":
         "watermark bounds state to open windows; late data dropped "
         "deterministically (st5-tested)",
-    "jobs.sliding_counts":
-        "state bounded by windows-per-slide; same watermark "
-        "discipline",
     "jobs.session_aggs":
         "session windows with watermark — state = open sessions only",
     "jobs.dedup_stream":
